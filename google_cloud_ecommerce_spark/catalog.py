@@ -231,23 +231,3 @@ def invalidate_table(spark: SparkSession, sf_dir: str, name: str) -> None:
     within a session (a fingerprint mismatch proves exactly that)."""
     _PLAN_CACHE.pop((spark.sparkContext.applicationId, sf_dir, name), None)
     spark.catalog.refreshByPath(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, register_views: bool = True
-) -> dict[str, DataFrame]:
-    """Load every testdata table; optionally register temp views.
-
-    Views let operators be written in whichever of DataFrame/SQL reads
-    more clearly — Catalyst produces the same plan either way.
-    """
-    dfs: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = load_table(spark, sf_dir, name)
-        dfs[name] = df
-        if register_views:
-            df.createOrReplaceTempView(name)
-    return dfs

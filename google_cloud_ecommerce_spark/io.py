@@ -117,9 +117,12 @@ def compact_parquet_dir(
     scan. Sizing from the ACTUAL on-disk bytes (not a row-count guess)
     keeps output files near the parquet sweet spot; coalesce() avoids a
     shuffle when only merging (narrow dependency), which is the common
-    case.
+    case. coalesce() can only lower the scan's partition count, and the
+    scan may already pack many small files into fewer partitions than
+    ``n_out`` (it sizes splits by cores and bytes), so a scan with
+    fewer partitions than ``n_out`` is repartitioned instead.
 
-    Returns the number of output files requested.
+    Returns the number of output files written.
     """
     # Hadoop FS listing works for any scheme (file://, s3a://, gs://),
     # unlike a local glob.
@@ -127,15 +130,14 @@ def compact_parquet_dir(
     jpath = jvm.org.apache.hadoop.fs.Path(src_dir)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     it = fs.listFiles(jpath, True)
-    total_bytes, n_files = 0, 0
+    total_bytes = 0
     while it.hasNext():
         st = it.next()
         if st.getPath().getName().endswith(".parquet"):
             total_bytes += st.getLen()
-            n_files += 1
     n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil division
     df = spark.read.parquet(src_dir)
-    if n_out < max(n_files, 1):
+    if df.rdd.getNumPartitions() >= n_out:
         df = df.coalesce(int(n_out))  # merge-only: no shuffle
     else:
         df = df.repartition(int(n_out))  # splitting needs a shuffle

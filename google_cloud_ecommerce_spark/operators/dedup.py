@@ -1236,6 +1236,17 @@ def _semdedup_n_sub_case(needed: str) -> str:
     return f"CASE {whens} ELSE {1 << SEMDEDUP_SPLIT_BITS} END"
 
 
+def _shuffle_partitions(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as an int. Managed platforms
+    accept non-numeric values such as ``"auto"`` (partitions chosen at
+    run time); those fall back to the default parallelism."""
+    raw = spark.conf.get("spark.sql.shuffle.partitions", "200")
+    try:
+        return int(raw)
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
+
+
 def semdedup_clusters(
     spark: SparkSession,
     sf_dir: str,
@@ -1325,7 +1336,7 @@ def semdedup_clusters(
     #      cluster can leave one subkey holding most of its pair
     #      space; c_n is computed identically on both join sides).
     salt_n = 8
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    shuffle_p = _shuffle_partitions(spark)
     salt_base = max(1, min(salt_n, -(-shuffle_p // max(int(k), 1))))
     # selectExpr, ONE py4j call: a 64-element F.col("v")[i] list
     # comprehension costs ~190 driver round-trips per build (~0.6 s
@@ -2100,14 +2111,6 @@ ORACLE["lsh_band_sweep"] = _lsh_band_sweep_sql()
 # ---------------------------------------------------------------------------
 
 SPAN_K = 8  # tokens per sliding window
-
-
-def _span_slide_spark() -> str:
-    parts = ", ".join(f"element_at(toks, i + {j})" for j in range(SPAN_K))
-    return (
-        f"transform(sequence(1, size(toks) - {SPAN_K - 1}), "
-        f"i -> xxhash64(concat_ws(' ', {parts})))"
-    )
 
 
 def _span_slide_sql() -> str:

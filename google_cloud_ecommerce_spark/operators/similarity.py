@@ -1078,10 +1078,6 @@ ORACLE["embedding_quantize"] = _embedding_quantize_sql()
 POWER_ITERS = 4
 
 
-def _proj_with(cv: str) -> str:
-    return dot_expr("v", cv)
-
-
 def _power_iterate(spark: SparkSession, emb: DataFrame) -> DataFrame:
     """POWER_ITERS rounds of x <- normalize(X^T X x); returns the 1-row
     iterate frame (column `x`, array<double>)."""
@@ -1258,7 +1254,7 @@ def _pq_seed_rows(sub: DataFrame) -> DataFrame:
     embedded the previous seeds twice) + a fresh groupBy(m) collapse
     before it could broadcast. This chain is single-reference, so no
     pins are needed and each round materializes exactly once as the
-    next round's broadcast build — measured 17 -> 10 jobs on
+    next round's broadcast build — measured 17 -> 13 jobs on
     pq_encode with picks bit-identical (same (mind, nid) argmax)."""
     seeds = sub.filter(F.col("vec_id") == 0).groupBy("m").agg(
         F.collect_list(
@@ -1895,7 +1891,8 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-12: the centroid was ONE aggregate with EMBED_DIM=64 parallel
     # decimal sum columns — the exact codegen-blowup shape the round-6
     # kmeans gotcha records. The posexplode + per-dim aggregate + array
-    # reassembly shape (kmeans_assign's _kmeans_update_step) computes the
+    # reassembly shape (the per-(c_id, dim) aggregate of kmeans_assign's
+    # _kmeans_update_row, here with one group per dim) computes the
     # SAME order-independent decimal means; interleaved A/B at sf0.1:
     # min 3.10 -> 1.01 s, identical output rows.
     per_dim = (

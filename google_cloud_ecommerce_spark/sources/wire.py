@@ -7,29 +7,38 @@ event, published to / consumed from Pub/Sub
 `write_session_stream.py:51-59`). Here that wire format becomes a real
 Spark source with the three faces a message system needs:
 
-  batch reader    one InputPartition per message file; parses the
-                  positional CSV line back into typed rows. Supports
+  batch reader    one InputPartition per message file. Supports
                   source-level EqualTo(event_type) filter pushdown —
-                  pruned at parse time, before rows reach the JVM.
-  stream reader   SimpleDataSourceStreamReader whose offset is the
-                  count of consumed files — the Pub/Sub subscription
-                  stand-in, with replayable readBetweenOffsets for
-                  exactly-once micro-batch recovery.
+                  an Arrow filter at parse time, before rows reach the
+                  JVM.
+  stream reader   DataSourceStreamReader whose offset is the count of
+                  files, in sorted-name order — the Pub/Sub
+                  subscription stand-in. A micro-batch plans one
+                  InputPartition per file in [start, end), so executor
+                  tasks parse its files in parallel, and any offset
+                  range replays for exactly-once recovery.
   batch writer    per-partition message files (the publish sink,
                   SURVEY §2.2 #9) with WriterCommitMessage plumbing.
 
+Both readers share one file reader, ``_read_wire_file``. It parses
+whole-line chunks column-wise with ``pyarrow.compute`` and yields Arrow
+``RecordBatch``es, which cross to the JVM as they are.
+
 Format: ``event_id,ts,user_id,event_type,value,props`` with ts as
-``yyyy-MM-dd HH:mm:ss.ffffff``; props is LAST and parsed with
-``split(',', 5)`` so its embedded commas survive (the reference's
-whitespace re-join corrupts such fields — SURVEY §3.2). ``ts`` is
-TIMESTAMP_NTZ end to end: naive wall-clock text parses to a naive
-datetime, so no session/process timezone can shift values.
+``yyyy-MM-dd HH:mm:ss.ffffff``; props is LAST and split off with at
+most 5 splits, so its embedded commas survive (the reference's
+whitespace re-join corrupts such fields — SURVEY §3.2). ``''`` is NULL
+in every field. ``ts`` is TIMESTAMP_NTZ end to end: naive wall-clock
+text parses to a naive ``timestamp[us]``, so no session/process
+timezone can shift values.
 
 Scale posture: a Python source is the integration/edge path, not the
-bulk-scan path — per-file partitions parallelize across executors and
-rows cross to the JVM via Arrow batches, but a 100 TB corpus belongs in
-parquet (catalog.py). This is the adapter for the message-shaped edge
-of the pipeline, exactly where the reference used Pub/Sub.
+bulk-scan path. Per-file partitions run as executor tasks on both
+faces, a task holds one chunk of lines (``_CHUNK_BYTES``) at a time,
+not its whole file, and rows reach the JVM as Arrow batches; but a
+100 TB corpus belongs in parquet (catalog.py). This is the adapter for
+the message-shaped edge of the pipeline, exactly where the reference
+used Pub/Sub.
 """
 
 from __future__ import annotations
@@ -41,16 +50,19 @@ import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamReader,
     DataSourceStreamWriter,
     DataSourceWriter,
     EqualTo,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -63,23 +75,58 @@ WIRE_SCHEMA = (
     "event_type string, value double, props string"
 )
 _TS_FMT = "%Y-%m-%d %H:%M:%S.%f"
-N_FIELDS = 6
 
 
-def _parse_line(line: str):
+# WIRE_SCHEMA in Arrow, field for field: Spark takes yielded batches
+# as they are, so these types must be exactly what it expects
+_ARROW_SCHEMA = pa.schema(
+    [
+        ("event_id", pa.int64()),
+        ("ts", pa.timestamp("us")),  # no tz: TIMESTAMP_NTZ
+        ("user_id", pa.int64()),
+        ("event_type", pa.string()),
+        ("value", pa.float64()),
+        ("props", pa.string()),
+    ]
+)
+# Text a task parses at once: fh.readlines(hint) stops at the first
+# whole line past it, so memory follows the chunk, not the file.
+_CHUNK_BYTES = 8 << 20
+
+
+def _field(parts: pa.ListArray, i: int) -> pa.Array:
     # '' is the wire encoding of NULL for EVERY column (the writer side
     # — write_wire_dir and WireBatchWriter — emits '' for None in every
     # position, so a null can never shift later fields)
-    parts = line.split(",", N_FIELDS - 1)
-    event_id, ts, user_id, event_type, value, props = parts
-    return (
-        int(event_id) if event_id else None,
-        dt.datetime.strptime(ts, _TS_FMT) if ts else None,
-        int(user_id) if user_id else None,
-        event_type if event_type else None,
-        float(value) if value else None,
-        props if props != "" else None,
+    f = pc.list_element(parts, i)
+    return pc.if_else(pc.equal(f, ""), None, f)
+
+
+def _parse_chunk(lines: list[str], event_type_eq: str | None) -> pa.RecordBatch:
+    text = pc.utf8_rtrim(pa.array(lines, pa.string()), characters="\n")
+    text = text.filter(pc.not_equal(text, ""))
+    # at most 5 splits: props, the last field, keeps its commas. A line
+    # with fewer than 6 fields fails list_element loudly.
+    parts = pc.split_pattern(text, ",", max_splits=len(_ARROW_SCHEMA) - 1)
+    if event_type_eq is not None:
+        event_type = _field(parts, _ARROW_SCHEMA.get_field_index("event_type"))
+        parts = parts.filter(pc.equal(event_type, event_type_eq))
+    # string -> double parses NaN/Infinity (Spark's spelling) and
+    # nan/inf (Python repr's); string -> timestamp[us] parses the
+    # ISO-8601 wall-clock text without applying any zone
+    return pa.RecordBatch.from_arrays(
+        [pc.cast(_field(parts, i), t) for i, t in enumerate(_ARROW_SCHEMA.types)],
+        schema=_ARROW_SCHEMA,
     )
+
+
+def _read_wire_file(path: str, event_type_eq: str | None = None):
+    """Yield one message file as typed Arrow RecordBatches, one per
+    chunk of whole lines; blank lines are skipped. With
+    ``event_type_eq`` only rows of that event type are kept."""
+    with open(path, encoding="utf-8") as fh:
+        while lines := fh.readlines(_CHUNK_BYTES):
+            yield _parse_chunk(lines, event_type_eq)
 
 
 def _wire_files(path: str) -> list[str]:
@@ -127,20 +174,13 @@ class WireBatchReader(DataSourceReader):
         return [InputPartition(f) for f in _wire_files(self.path)]
 
     def read(self, partition: InputPartition):
-        want = self.event_type_eq
-        with open(partition.value, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.rstrip("\n")
-                if not line:
-                    continue
-                row = _parse_line(line)
-                if want is None or row[3] == want:
-                    yield row
+        return _read_wire_file(partition.value, self.event_type_eq)
 
 
-class WireStreamReader(SimpleDataSourceStreamReader):
-    """Offset = number of files consumed, in sorted-name order (files
-    are the micro-batch unit, like the replay dir's paced chunks)."""
+class WireStreamReader(DataSourceStreamReader):
+    """Offset = number of files, in sorted-name order (files are the
+    micro-batch unit, like the replay dir's paced chunks). Each file of
+    a micro-batch is its own executor task."""
 
     def __init__(self, options):
         self.path = options["path"]
@@ -148,29 +188,15 @@ class WireStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"n_files": 0}
 
-    def read(self, start: dict):
-        files = _wire_files(self.path)
-        rows = self._rows(files[start["n_files"] :])
-        return rows, {"n_files": len(files)}
+    def latestOffset(self) -> dict:
+        return {"n_files": len(_wire_files(self.path))}
 
-    def readBetweenOffsets(self, start: dict, end: dict):
-        files = _wire_files(self.path)
-        return self._rows(files[start["n_files"] : end["n_files"]])
+    def partitions(self, start: dict, end: dict):
+        files = _wire_files(self.path)[start["n_files"] : end["n_files"]]
+        return [InputPartition(f) for f in files]
 
-    def _rows(self, files):
-        # Materialized list, not a generator: the engine's prefetch cache
-        # copy.copy()s these row iterables between offset commits.
-        rows = []
-        for path in files:
-            with open(path, encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.rstrip("\n")
-                    if line:
-                        rows.append(_parse_line(line))
-        return rows
-
-    def commit(self, end: dict) -> None:
-        pass
+    def read(self, partition: InputPartition):
+        return _read_wire_file(partition.value)
 
 
 @dataclass
@@ -383,7 +409,7 @@ class WireDataSource(DataSource):
     def reader(self, schema: StructType) -> DataSourceReader:
         return WireBatchReader(self.options)
 
-    def simpleStreamReader(self, schema: StructType) -> WireStreamReader:
+    def streamReader(self, schema: StructType) -> WireStreamReader:
         return WireStreamReader(self.options)
 
     def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
@@ -481,7 +507,9 @@ def wire_format_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def wire_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming face: the same message files consumed as micro-batches
-    through the SimpleDataSourceStreamReader offsets."""
+    through the DataSourceStreamReader file-count offsets; each file of
+    a micro-batch is parsed by its own executor task into Arrow
+    batches."""
     import shutil
 
     from google_cloud_ecommerce_spark.streaming.jobs import _run_to_memory

@@ -71,9 +71,10 @@ def kafka_sink_options(bootstrap_servers: str, topic: str) -> dict[str, str]:
 def parse_wire_value(value: Column) -> Column:
     """Kafka ``value`` bytes -> typed event struct, all JVM-side.
 
-    ``split`` with limit 6 mirrors sources/wire.py ``_parse_line``:
-    props keeps its embedded commas. Empty props decodes to NULL, the
-    inverse of the sink's empty-string encoding."""
+    ``split`` with limit 6 mirrors sources/wire.py ``_read_wire_file``
+    (``split_pattern`` with at most 5 splits): props keeps its embedded
+    commas. An empty field decodes to NULL, the inverse of the sink's
+    empty-string encoding."""
     line = value.cast("string")
     parts = F.split(line, ",", 6)
 

@@ -685,6 +685,26 @@ def test_media_ops_match_oracle_on_empty_doc(spark, tmp_path):
         assert not problems, f"{name}: {problems}"
 
 
+def test_semdedup_shuffle_partitions_tolerates_non_numeric(spark):
+    """The pair-stage salt reads spark.sql.shuffle.partitions; a
+    non-numeric value such as "auto" (accepted by managed platforms,
+    rejected by a local session's conf setter) falls back to the
+    default parallelism, and a numeric value is used as is."""
+    from types import SimpleNamespace
+
+    def fake(value):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key, default=None: value),
+            sparkContext=SimpleNamespace(defaultParallelism=12),
+        )
+
+    assert dedup._shuffle_partitions(fake("auto")) == 12
+    assert dedup._shuffle_partitions(fake("64")) == 64
+    assert dedup._shuffle_partitions(spark) == int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
+
+
 def test_semdedup_mega_cluster_splits_and_matches_oracle(spark, tmp_path):
     """Skew hardening (round 4): a LOOSE mega-cluster far above
     SEMDEDUP_CLUSTER_CAP must (a) actually sub-split — multiple subkeys

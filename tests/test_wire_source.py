@@ -1,7 +1,9 @@
 """Wire-format Python Data Source tests: typed roundtrip through the
 batch reader, writer→reader identity, reader-level filter pushdown,
-and embedded-comma survival (the failure mode of the reference's
-whitespace re-join, SURVEY.md §3.2)."""
+the shared Arrow file reader on a hand-written file (float spellings,
+NULLs, embedded commas — the failure mode of the reference's
+whitespace re-join, SURVEY.md §3.2 — blank lines, multi-chunk files),
+and stream restart from a checkpoint."""
 
 from __future__ import annotations
 
@@ -14,7 +16,7 @@ from google_cloud_ecommerce_spark.catalog import load_table
 from google_cloud_ecommerce_spark.sources.wire import (
     WIRE_FORMAT,
     WireBatchReader,
-    _parse_line,
+    _read_wire_file,
     _safe_register,
     write_wire_dir,
 )
@@ -86,12 +88,131 @@ def test_wire_pushdown_results_match_unpushed(spark, sf_smoke):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_wire_props_commas_survive():
-    line = '7,2024-01-02 03:04:05.000006,42,view,1.5,{"k": 69, "tags": [1,2]}'
-    row = _parse_line(line)
+def _read_rows(path, **kw):
+    batches = list(_read_wire_file(str(path), **kw))
+    rows = [r for b in batches for r in zip(*(c.to_pylist() for c in b.columns))]
+    return batches, rows
+
+
+def test_wire_props_commas_survive(tmp_path):
+    f = tmp_path / "m.wire"
+    f.write_text(
+        '7,2024-01-02 03:04:05.000006,42,view,1.5,{"k": 69, "tags": [1,2]}\n'
+        "1,2024-01-02 03:04:05.000000,2,cart,0.5,\n"
+    )
+    _, rows = _read_rows(f)
+    row = rows[0]
     assert row[0] == 7 and row[2] == 42 and row[4] == 1.5
     assert row[5] == '{"k": 69, "tags": [1,2]}'
-    assert _parse_line("1,2024-01-02 03:04:05.000000,2,cart,0.5,")[5] is None
+    assert rows[1][5] is None
+
+
+# A hand-written message file: float spellings of write_wire_dir (Spark
+# casts: NaN/Infinity) and of WireBatchWriter (Python repr: nan/inf),
+# -0.0, '' as NULL in each field, commas inside props, a blank line in
+# the middle and a trailing newline.
+_HAND_FILE = """\
+1,2024-01-02 03:04:05.000006,42,view,NaN,{"k": 1, "tags": [1,2]}
+2,2024-01-02 03:04:06.000000,43,cart,Infinity,a,b,,c
+3,2024-01-02 03:04:07.000000,44,purchase,-Infinity,p
+4,2024-01-02 03:04:08.000000,45,view,nan,p
+
+5,2024-01-02 03:04:09.000000,46,view,inf,p
+6,2024-01-02 03:04:10.000000,47,cart,-inf,p
+7,2024-01-02 03:04:11.000000,48,view,-0.0,p
+,2024-01-03 00:00:00.000000,2,view,1.5,p
+10,,2,view,1.5,p
+11,2024-01-03 00:00:00.000000,,view,1.5,p
+12,2024-01-03 00:00:00.000000,2,,1.5,p
+13,2024-01-03 00:00:00.000000,2,view,,p
+14,2024-01-03 00:00:00.000000,2,view,1e-05,
+"""
+
+
+def test_wire_file_reader_types_and_nulls(tmp_path):
+    import datetime as dt
+
+    f = tmp_path / "hand.wire"
+    f.write_text(_HAND_FILE)
+    batches, rows = _read_rows(f)
+    assert len(batches) == 1
+    assert str(batches[0].schema.field("ts").type) == "timestamp[us]"
+    assert [r[0] for r in rows] == [1, 2, 3, 4, 5, 6, 7, None, 10, 11, 12, 13, 14]
+    assert [repr(r[4]) for r in rows] == [
+        "nan", "inf", "-inf", "nan", "inf", "-inf", "-0.0",
+        "1.5", "1.5", "1.5", "1.5", "None", "1e-05",
+    ]
+    assert rows[0][1] == dt.datetime(2024, 1, 2, 3, 4, 5, 6)
+    assert rows[0][1].tzinfo is None
+    assert rows[0][5] == '{"k": 1, "tags": [1,2]}'
+    assert rows[1][5] == "a,b,,c"
+    # '' is NULL in every field, without shifting the later ones
+    assert rows[7] == (None, dt.datetime(2024, 1, 3), 2, "view", 1.5, "p")
+    assert rows[8] == (10, None, 2, "view", 1.5, "p")
+    assert rows[9] == (11, dt.datetime(2024, 1, 3), None, "view", 1.5, "p")
+    assert rows[10] == (12, dt.datetime(2024, 1, 3), 2, None, 1.5, "p")
+    assert rows[11] == (13, dt.datetime(2024, 1, 3), 2, "view", None, "p")
+    assert rows[12] == (14, dt.datetime(2024, 1, 3), 2, "view", 1e-05, None)
+
+
+def test_wire_file_reader_event_type_filter(tmp_path):
+    f = tmp_path / "hand.wire"
+    f.write_text(_HAND_FILE)
+    _, rows = _read_rows(f, event_type_eq="cart")
+    assert [r[0] for r in rows] == [2, 6]
+    assert rows[1][3] == "cart" and repr(rows[1][4]) == "-inf"
+    _, none = _read_rows(f, event_type_eq="refund")
+    assert none == []
+
+
+def test_wire_file_reader_chunks_bound_the_batch(tmp_path, monkeypatch):
+    """A file larger than one chunk gives one RecordBatch per chunk of
+    whole lines, and the same rows as a single-chunk read."""
+    from google_cloud_ecommerce_spark.sources import wire
+
+    f = tmp_path / "hand.wire"
+    f.write_text(_HAND_FILE * 3)
+    one, rows = _read_rows(f)
+    monkeypatch.setattr(wire, "_CHUNK_BYTES", 200)
+    chunked, chunked_rows = _read_rows(f)
+    assert len(one) == 1 and len(chunked) > 1
+    assert max(b.num_rows for b in chunked) < len(rows) == 39
+    assert list(map(repr, chunked_rows)) == list(map(repr, rows))
+
+
+def test_wire_stream_restart_reads_only_new_files(spark, tmp_path):
+    """A second availableNow run on the same checkpoint, after one new
+    file lands, reads exactly that file: offsets are file counts in
+    sorted-name order, so nothing is replayed or skipped."""
+    _safe_register(spark)
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    (tmp_path / "src").mkdir()
+
+    def put(name, ids):
+        (tmp_path / "src" / name).write_text(
+            "".join(f"{i},2024-01-01 00:00:00.000000,1,view,1.0,p\n" for i in ids)
+        )
+
+    def run():
+        q = (
+            spark.readStream.format(WIRE_FORMAT)
+            .load(src)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return sum(p["numInputRows"] for p in q.recentProgress)
+
+    put("m-0000.wire", [1, 2])
+    put("m-0001.wire", [3])
+    assert run() == 3
+    put("m-0002.wire", [4, 5, 6, 7])
+    assert run() == 4
+    got = sorted(r.event_id for r in spark.read.parquet(out).collect())
+    assert got == [1, 2, 3, 4, 5, 6, 7]
 
 
 def test_wire_null_in_every_field_roundtrips(spark, tmp_path):
